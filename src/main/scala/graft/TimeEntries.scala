@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-loop per-entry timer (args: sfDir [--all] [--reps N]
   * [--json path] name1 name2 …): runs the named catalog entries (or the
   * whole catalog with --all) exactly the way Bench's sequential pass
@@ -33,13 +31,7 @@ object TimeEntries {
     val names =
       if (all) SparkEntry.queries.keys.toSeq.sorted else explicit.toSeq
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("ERROR")
     Graft.referenceSemantics(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

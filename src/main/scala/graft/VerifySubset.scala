@@ -2,8 +2,6 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-loop variant of [[Verify]]: dump only the named catalog entries
   * (args: sfDir outDir name1 name2 …) plus their oracle_sql.json, so a new
   * entry can be checked with tools/check.py in seconds instead of re-running
@@ -16,13 +14,7 @@ object VerifySubset {
     val outDir = args(1)
     val names = args.drop(2).toSet
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .withExtensions(new graft.functions.GraftExtensions)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Graft.session(s"local[$cpus]", cpus.toInt)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     val defs = SparkEntry.catalog.filter(q => names.contains(q.name))

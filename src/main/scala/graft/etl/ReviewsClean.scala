@@ -44,14 +44,16 @@ object ReviewsClean {
 
   /** Global mean of score (reviews.py:102) then per-column fills
     * (reviews.py:104-107). The score fill is a no-op by construction —
-    * reproduced, not "fixed". */
+    * reproduced, not "fixed". With no parseable score the mean is NULL and
+    * no rows are left to fill, so the score fill is skipped. */
   def fillNulls(df: DataFrame): DataFrame = {
-    val meanScore = df.agg(avg(col("review/score"))).first().getDouble(0)
-    df.na.fill(Map(
+    val mean = df.agg(avg(col("review/score"))).first()
+    val filled = df.na.fill(Map(
         "Title" -> "N.A", "User_id" -> "N.A", "profileName" -> "N.A",
         "review/summary" -> "N.A", "review/text" -> "N.A"))
       .na.fill(Map("Review_helpfulness" -> 0.0))
-      .na.fill(Map("review/score" -> meanScore))
+    if (mean.isNullAt(0)) filled
+    else filled.na.fill(Map("review/score" -> mean.getDouble(0)))
   }
 
   /** Final 10-column shape with renames (reviews.py:113). */

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.Row
 
-import graft.etl.{DetailsClean, ReviewsClean}
+import graft.etl.{DetailsClean, ReviewsClean, Schemas}
 
 /** Golden tests for the two batch cleaning pipelines over dirty fixtures
   * (FIXTURES.md §A — every dirty-data class the reference handles). */
@@ -94,6 +94,21 @@ class EtlSpec extends SparkSpec {
     // never attempts the failing conversion and drops nothing
     assert(dropped.collect().length === 2)
     permissive.unpersist()
+  }
+
+  test("reviews: header-only CSV cleans to an empty 10-column parquet") {
+    // no parseable score: the global mean is NULL and the score fill is
+    // skipped (it used to fail with ROW_VALUE_IS_NULL)
+    val dir = tmpDir("reviews_empty")
+    val in = s"$dir/Books_rating.csv"
+    val header = java.nio.file.Files.readAllLines(
+      java.nio.file.Paths.get(fixture("Books_rating.csv"))).get(0)
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(in), header + "\n")
+    ReviewsClean.run(spark, in, s"$dir/out")
+    val out = spark.read.parquet(s"$dir/out")
+    assert(out.count() === 0)
+    assert(out.schema.map(f => f.name -> f.dataType) ===
+      Schemas.ratingsCleaned.map(f => f.name -> f.dataType))
   }
 
   test("reviews: 10-column cleaned schema") {
